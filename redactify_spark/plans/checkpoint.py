@@ -16,6 +16,11 @@ sum of per-row xxhash64 over canonicalized columns -- order-insensitive,
 partitioning-insensitive, cheap (one extra aggregation over data already
 in memory at write time).
 
+`run_concurrently(spark, *thunks)` runs independent stages at the same
+time, each still its own `run_stage`: while one stage's driver plans,
+lists files or writes a manifest, the other's Spark jobs keep the task
+slots busy.
+
 Per-partition granularity: the parquet write already materializes one
 file per partition; the manifest records the per-partition row counts so
 a resumed run can verify integrity without rescanning content.
@@ -27,10 +32,12 @@ import json
 import os
 import shutil
 import time
-from typing import Callable
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 
 def _manifest_path(root: str, stage: str) -> str:
@@ -159,7 +166,11 @@ def run_stage(spark: SparkSession, root: str, stage: str,
     os.replace(tmp, data)
 
     m = obs.get
-    persisted = spark.read.parquet(data)
+    # read back with the schema just written: a bare read would run a
+    # parquet schema-inference job.  File sources force every field
+    # nullable either way, so this equals the schema a resumed
+    # (inferred) read gets
+    persisted = spark.read.schema(df.schema).parquet(data)
     manifest = {
         "stage": stage,
         "status": "complete",
@@ -176,6 +187,38 @@ def run_stage(spark: SparkSession, root: str, stage: str,
         json.dump(manifest, f, indent=1)
     os.replace(mp + ".tmp", mp)
     return persisted
+
+
+def run_concurrently(spark: SparkSession,
+                     *thunks: Callable[[], Any]) -> list[Any]:
+    """Run independent stage thunks at the same time; return their
+    results in argument order.
+
+    The last thunk runs on the calling thread, so Ctrl-C lands in it as
+    it would in sequential code: pass the main chain last.  Every
+    other thunk runs on a pool thread made with
+    `inheritable_thread_target`, so the caller's local properties (job
+    group, description, scheduler pool) and tags carry over.  A failure
+    does not cut the other thunks short: the error is re-raised only
+    after every thunk has finished, so no stage is still writing when
+    the caller sees it, and each branch's completed stages keep their
+    manifests for the rerun.  The last thunk's own error wins; otherwise
+    the first failed pool thunk's, in argument order.
+
+    Like `cancelJobGroup` itself, cancelling the caller's job group
+    reaches only the jobs running at that moment.  To stop every branch,
+    cancel the group's future jobs too (the JVM's
+    `SparkContext.cancelJobGroupAndFutureJobs`): each branch then fails
+    at its next job."""
+    *branches, last = thunks
+    # wrap per thunk: each wrapper clones the caller's properties, so a
+    # branch that sets its own job group cannot change another's
+    with ThreadPoolExecutor(max_workers=max(len(branches), 1)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(t))
+                   for t in branches]
+        result = last()
+    # leaving the block waited for every branch, also when last() raised
+    return [f.result() for f in futures] + [result]
 
 
 def read_manifest(root: str, stage: str) -> dict:
@@ -195,8 +238,10 @@ def invalidate(root: str, stage: str) -> None:
 def kg_pipeline(spark: SparkSession, pages: DataFrame, root: str,
                 id_col: str = "url") -> dict[str, DataFrame]:
     """pages -> mentions -> triples -> link edges -> canon -> nodes/edges,
-    each stage checkpointed under `root`.  Kill the process after any
-    stage: rerunning resumes from the last complete stage (verified in
+    each stage checkpointed under `root`.  Independent stages run at the
+    same time (`run_concurrently`): 02_triples beside the 03..07 chain,
+    and 05_nodes beside 06_edges.  Kill the process anywhere: rerunning
+    recomputes only the stages without a complete manifest (verified in
     tests/test_checkpoint.py)."""
     from redactify_spark.operators.components import canonical_map
     from redactify_spark.operators.detection import detect_mentions
@@ -208,28 +253,40 @@ def kg_pipeline(spark: SparkSession, pages: DataFrame, root: str,
     mentions = run_stage(spark, root, "01_mentions",
                          lambda: detect_mentions(pages, id_col=id_col,
                                                  text_col="text"))
-    triples = run_stage(spark, root, "02_triples",
-                        lambda: all_triples(mentions, id_col=id_col))
-    medges = run_stage(spark, root, "03_match_edges",
-                       lambda: match_edges(mentions))
-    canon = run_stage(spark, root, "04_canonical",
-                      lambda: canonical_map(mentions, medges))
-    # canonicalized mentions materialized ONCE: nodes and edges both
-    # consume it, so the mentions-sized pseudo_key shuffle join is paid
-    # here instead of inside each downstream stage (3x at 10^6 docs)
-    cmention = run_stage(spark, root, "04b_canon_mentions",
-                         lambda: mentions.join(canon, "pseudo_key"))
-    nodes = run_stage(spark, root, "05_nodes",
-                      lambda: build_nodes_from_canon(cmention,
-                                                     id_col=id_col))
-    edges = run_stage(spark, root, "06_edges",
-                      lambda: build_edges_from_canon(cmention,
-                                                     id_col=id_col))
-    salience = run_stage(spark, root, "07_salience",
-                         lambda: _entity_salience(nodes, edges))
-    return {"mentions": mentions, "triples": triples,
-            "match_edges": medges, "canonical": canon,
-            "nodes": nodes, "edges": edges, "salience": salience}
+
+    def graph() -> dict[str, DataFrame]:
+        medges = run_stage(spark, root, "03_match_edges",
+                           lambda: match_edges(mentions))
+        canon = run_stage(spark, root, "04_canonical",
+                          lambda: canonical_map(mentions, medges))
+        # canonicalized mentions materialized ONCE: nodes and edges both
+        # consume it, so the mentions-sized pseudo_key shuffle join is
+        # paid here instead of inside each downstream stage (3x at 10^6
+        # docs)
+        cmention = run_stage(spark, root, "04b_canon_mentions",
+                             lambda: mentions.join(canon, "pseudo_key"))
+        nodes, edges = run_concurrently(
+            spark,
+            lambda: run_stage(spark, root, "05_nodes",
+                              lambda: build_nodes_from_canon(
+                                  cmention, id_col=id_col)),
+            lambda: run_stage(spark, root, "06_edges",
+                              lambda: build_edges_from_canon(
+                                  cmention, id_col=id_col)))
+        salience = run_stage(spark, root, "07_salience",
+                             lambda: _entity_salience(nodes, edges))
+        return {"match_edges": medges, "canonical": canon,
+                "nodes": nodes, "edges": edges, "salience": salience}
+
+    # 02_triples feeds no later stage: it runs on a pool thread beside
+    # the whole 03 -> 04 -> 04b -> {05, 06} -> 07 chain, which stays on
+    # this thread
+    triples, tables = run_concurrently(
+        spark,
+        lambda: run_stage(spark, root, "02_triples",
+                          lambda: all_triples(mentions, id_col=id_col)),
+        graph)
+    return {"mentions": mentions, "triples": triples, **tables}
 
 
 def _entity_salience(nodes: DataFrame, edges: DataFrame) -> DataFrame:
